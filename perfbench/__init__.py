@@ -1,0 +1,2 @@
+"""Closed-loop benchmark for the engine: three workloads, end-to-end and
+per-layer metrics. Entry point: ``python3 perfbench/run.py``."""
