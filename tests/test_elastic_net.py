@@ -177,6 +177,41 @@ def test_spark_moments_dropna(spark):
     assert m.sums(["x0"])[0] == pytest.approx(5.0)
 
 
+def _wide_lagged_frame(spark, k):
+    """12 rows of k lag-named columns (``s<i>.l<j>``), NULLs in rows 2
+    and 7."""
+    import pandas as pd
+
+    rng = np.random.default_rng(3)
+    cols = [f"s{i // 2}.l{1 + i % 2}" for i in range(k)]
+    X = rng.normal(size=(12, k))
+    X[2, 5] = X[7, k - 1] = np.nan
+    pdf = pd.DataFrame(X, columns=cols).astype(object)
+    pdf[pdf.isna()] = None
+    sdf = spark.createDataFrame(pdf, ", ".join(f"`{c}` double" for c in cols))
+    return sdf, cols, X[~np.isnan(X).any(axis=1)]
+
+
+def test_spark_moments_wide_k(spark):
+    """k = 960: the na.omit predicate must stay flat — a chain of one
+    isNotNull conjunct per column overflowed the JVM stack in query
+    analysis at a few hundred columns."""
+    from var_elasticnet_bigdata_spark.ml.local import moments_from_numpy
+
+    sdf, cols, complete = _wide_lagged_frame(spark, 960)
+    m = compute_moments(sdf.coalesce(1), cols)
+    assert m.n == len(complete) == 10
+    assert m.m == pytest.approx(moments_from_numpy(complete, cols).m, rel=1e-9)
+
+
+def test_na_omit_wide_dotted_names(spark):
+    from var_elasticnet_bigdata_spark.operators.lag_embed import na_omit
+
+    sdf, cols, complete = _wide_lagged_frame(spark, 960)
+    assert na_omit(sdf, cols).count() == len(complete)
+    assert na_omit(sdf, cols[:1]).count() == 12  # `s0.l1` is a column
+
+
 def test_kkt_support_enumeration_matches_solver():
     """The SQL oracles for ml_enet_var_coefs / ml_tune_best /
     ml_ezlasso_enet / ml_cv_lambda_min / ml_preselect solve the

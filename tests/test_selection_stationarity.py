@@ -3,6 +3,10 @@
 from __future__ import annotations
 
 import datetime as dt
+import hashlib
+import json
+import uuid
+from pathlib import Path
 
 import numpy as np
 import pandas as pd
@@ -179,6 +183,106 @@ def test_stationarity_pipeline_branches(spark):
     assert all(d.month in (1, 4, 7, 10) for d in dates)
 
 
+# The fixpoint's parity fixture: recorded from the earlier driver-loop
+# implementation (one batch-ADF job per round over a growing union
+# lineage) by running this file as a script, and asserted exactly.
+PARITY_FIXTURE = Path(__file__).with_name("stationarity_parity.json")
+PARITY_CURRENCY = ("cur0", "cur1", "cur_i2", "cur_neg", "cur_rag")
+PARITY_SETTINGS = {
+    "main_r": {},
+    "testing_r": dict(
+        adf_k=7, crit=0.05, flag_ge=True, consume_currency=False,
+        currency_fallback_diff=False,
+    ),
+    "max_rounds_1": dict(max_rounds=1),
+    "flag_every_series": dict(crit=-1.0),  # no p-value is <= -1
+}
+
+
+def parity_panel() -> pd.DataFrame:
+    """20 years of monthly levels whose fixpoint takes every branch:
+    plain diff (rw*), log-diff (cur0/cur1), log-diff then extra diffs
+    (cur_i2), extra diff rounds (lvl_i2, rw0/rw1), ragged NULL starts
+    (rag0, and the log-diffed currency series cur_rag), and a currency
+    series with a non-positive level (cur_neg)."""
+    rng = np.random.default_rng(2024)
+    n = 240
+    cols = {}
+    for i in range(3):
+        cols[f"rw{i}"] = np.cumsum(rng.normal(0.0, 1.0, n))
+    for i in range(2):
+        cols[f"cur{i}"] = 50.0 * np.exp(np.cumsum(0.012 + rng.normal(0.0, 0.004, n)))
+    rate = 0.004 + np.cumsum(rng.normal(0.0, 0.0008, n))
+    cols["cur_i2"] = 80.0 * np.exp(np.cumsum(rate + rng.normal(0.0, 0.002, n)))
+    neg = np.cumsum(np.cumsum(rng.normal(0.0, 0.05, n)))
+    neg[n // 2] = -abs(neg[n // 2]) - 1.0
+    cols["cur_neg"] = neg
+    cols["lvl_i2"] = np.cumsum(np.cumsum(rng.normal(0.0, 0.05, n)))
+    cols["rag0"] = np.cumsum(rng.normal(0.0, 1.0, n))
+    cols["rag0"][:14] = np.nan
+    cols["cur_rag"] = 30.0 * np.exp(np.cumsum(0.012 + rng.normal(0.0, 0.003, n)))
+    cols["cur_rag"][:31] = np.nan
+    wide = pd.DataFrame(cols)
+    wide["obs_date"] = [dt.date(1990 + m // 12, 1 + m % 12, 1) for m in range(n)]
+    long = wide.melt(id_vars="obs_date", var_name="series_id", value_name="value")
+    return long[["series_id", "obs_date", "value"]]
+
+
+def parity_record(res: StationarityResult) -> dict:
+    """Everything the fixpoint returns; ``data`` as an order-insensitive
+    digest that tells NULL from NaN and compares floats bit for bit."""
+    rows = sorted(
+        (r["series_id"], r["obs_date"].isoformat(),
+         None if r["value"] is None else float(r["value"]).hex())
+        for r in res.data.collect()
+    )
+    return {
+        "transforms": {s: "+".join(t) for s, t in sorted(res.transforms.items())},
+        "rounds": res.rounds,
+        "still_non_stationary": res.still_non_stationary,
+        "rows": len(rows),
+        "data_sha256": hashlib.sha256(json.dumps(rows).encode()).hexdigest(),
+    }
+
+
+@pytest.fixture(scope="module")
+def parity_monthly(spark):
+    return spark.createDataFrame(parity_panel())
+
+
+@pytest.mark.parametrize("setting", sorted(PARITY_SETTINGS))
+def test_stationarity_matches_recorded_fixpoint(spark, parity_monthly, setting):
+    expected = json.loads(PARITY_FIXTURE.read_text())[setting]
+    res = stationarity_pipeline(
+        parity_monthly, set(PARITY_CURRENCY), **PARITY_SETTINGS[setting]
+    )
+    assert parity_record(res) == expected
+
+
+def _jobs_run_by(spark, fn):
+    """``fn()``'s result and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("setting", ["main_r", "flag_every_series"])
+def test_stationarity_job_count_independent_of_rounds(spark, parity_monthly, setting):
+    """The whole fixpoint is one grouped pass: a fixed handful of jobs
+    whether it takes 3 rounds or 8."""
+    res, jobs = _jobs_run_by(spark, lambda: stationarity_pipeline(
+        parity_monthly, set(PARITY_CURRENCY), **PARITY_SETTINGS[setting]
+    ))
+    assert res.rounds >= 3
+    assert jobs <= 6, f"{jobs} Spark jobs for {res.rounds} rounds"
+
+
 def test_make_quarterly_diffs_drops_first_quarter(spark):
     monthly = _simulate_monthly(spark)
     q = make_quarterly_diffs(monthly)
@@ -195,3 +299,18 @@ def test_unscale_inverts_standardization(spark):
     sdf = spark.createDataFrame(scaled)
     back = unscale(sdf, centers, scales).toPandas()
     assert back.to_numpy() == pytest.approx(pdf.to_numpy())
+
+
+if __name__ == "__main__":
+    # re-record the parity fixture with the installed implementation
+    from var_elasticnet_bigdata_spark.session import get_spark
+
+    session = get_spark("tests", shuffle_partitions=8)
+    monthly = session.createDataFrame(parity_panel())
+    PARITY_FIXTURE.write_text(json.dumps({
+        name: parity_record(
+            stationarity_pipeline(monthly, set(PARITY_CURRENCY), **kw)
+        )
+        for name, kw in sorted(PARITY_SETTINGS.items())
+    }, indent=1) + "\n")
+    session.stop()

@@ -23,6 +23,7 @@ from var_elasticnet_bigdata_spark.functions.stats import (
     cw_test,
     dm_test,
     ljung_box,
+    ljung_box_table,
     nw,
 )
 
@@ -206,6 +207,24 @@ def test_adf_batch_and_q1_fix(spark):
     # Q1 fixed: names come from the data itself
     assert "walk1" in non_stat and "walk2" in non_stat
     assert "stat1" not in non_stat
+
+
+def test_grouped_tests_raise_no_type_hint_warning(spark):
+    """The grouped-map functions carry no partial type hints, so PySpark
+    does not warn that it cannot infer their eval type."""
+    import datetime as dt
+    import warnings
+
+    df = spark.createDataFrame(
+        [("a", dt.date(2000, 1, 1) + dt.timedelta(days=i), float(i % 7))
+         for i in range(40)],
+        "series_id string, obs_date date, value double",
+    )
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        adf_table(df)
+        ljung_box_table(df, lags=4)
+    assert not [w for w in caught if issubclass(w.category, UserWarning)]
 
 
 def test_nw_q12_qn1_loop_quirk():

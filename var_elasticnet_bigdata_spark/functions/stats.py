@@ -224,6 +224,16 @@ def adf_test(x: np.ndarray, k: int | None = None) -> dict[str, float]:
     return {"statistic": stat, "p_value": p, "k": k}
 
 
+def adf_test_or_nan(x: np.ndarray, k: int | None = None) -> dict[str, float]:
+    """``adf_test`` with an undefined test (a degenerate or too-short
+    series) reported as NaN statistic and p-value instead of raising —
+    the per-series contract of the batch ADF."""
+    try:
+        return adf_test(x, k=k)
+    except Exception:
+        return {"statistic": float("nan"), "p_value": float("nan"), "k": k or 0}
+
+
 # ---------------------------------------------------------------------------
 # Spark batch variants
 # ---------------------------------------------------------------------------
@@ -257,12 +267,9 @@ def adf_table(
     )
     vc, dc, sc, kk = value_col, date_col, series_col, k
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key, pdf):
         x = pdf.sort_values(dc)[vc].to_numpy(dtype=float)
-        try:
-            r = adf_test(x, k=kk)
-        except Exception:  # degenerate series → undefined test
-            r = {"statistic": float("nan"), "p_value": float("nan"), "k": kk or 0}
+        r = adf_test_or_nan(x, k=kk)
         return pd.DataFrame(
             [{sc: key[0], "statistic": r["statistic"], "p_value": r["p_value"],
               "k": int(r["k"])}]
@@ -312,7 +319,7 @@ def ljung_box_table(
     )
     vc, dc, sc = value_col, date_col, series_col
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key, pdf):
         x = pdf.sort_values(dc)[vc].to_numpy(dtype=float)
         r = ljung_box(x, lags=lags, fitdf=fitdf)
         return pd.DataFrame(

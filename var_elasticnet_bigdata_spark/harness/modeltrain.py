@@ -151,7 +151,7 @@ def _forecast_table(
         ser = list(series)
         dcol = date_col
 
-        def run_origin(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def run_origin(key, pdf):
             pdf = pdf.sort_values(dcol)
             mat = pdf[ser].to_numpy(dtype=float)
             preds = fit_predict(mat)

@@ -66,8 +66,9 @@ def compute_moments(
     """One distributed pass → moment matrix (optionally per fold).
 
     ``dropna=True`` applies the reference's ``na.omit`` semantics
-    (Main.R:196): any row with a NULL in ``cols`` is excluded, pushed
-    down as IsNotNull filters before the scan.
+    (Main.R:196): any row with a NULL in ``cols`` is excluded by one
+    flat ``dropna`` predicate, so the width k is not bounded by
+    predicate nesting depth.
     """
     from pyspark.sql import functions as F
     from pyspark.sql.types import (
@@ -88,11 +89,7 @@ def compute_moments(
         sel.append(F.col(fold_col).alias("__fold"))
     data = df.select(*sel)
     if dropna:
-        cond = None
-        for s in safe:
-            p = F.col(s).isNotNull()
-            cond = p if cond is None else (cond & p)
-        data = data.filter(cond)
+        data = data.dropna(subset=safe)
 
     schema = StructType(
         [

@@ -304,18 +304,12 @@ def fit_group_enet_var(
 ):
     """Spark entry: distributed per-fold Gram pass → driver-side
     group coordinate descent (same shape as fit_enet_var)."""
-    from pyspark.sql import functions as F
-
-    from ..operators.lag_embed import lag_col_name, var_z
+    from ..operators.lag_embed import lag_col_name, na_omit, var_z
     from .gram import blocked_fold_column, compute_moments
 
     vz = var_z(wide_df.select(date_col, *series), series, p, date_col=date_col)
     z_cols = [lag_col_name(s, i) for i in range(1, p + 1) for s in series]
-    cond = None
-    for c in [*z_cols, *series]:
-        pred = F.col(f"`{c}`").isNotNull()
-        cond = pred if cond is None else (cond & pred)
-    frame = blocked_fold_column(vz.df.filter(cond), date_col, cv_block)
+    frame = blocked_fold_column(na_omit(vz.df, z_cols + series), date_col, cv_block)
     fm = compute_moments(frame, z_cols + series, fold_col="__fold")
     return cv_group_enet(fm, z_cols, series, alpha=alpha, intercept=intercept)
 
@@ -369,18 +363,12 @@ def fit_group_enet_var_fixed(
     B_orig, a0)`` on the original data scale. The CV λ.min flavor
     stays pinned in tests/test_group_enet.py (reference
     enetVAR.R:344-366)."""
-    from pyspark.sql import functions as F
-
-    from ..operators.lag_embed import lag_col_name, var_z
+    from ..operators.lag_embed import lag_col_name, na_omit, var_z
     from .gram import compute_moments
 
     vz = var_z(wide_df.select(date_col, *series), series, p, date_col=date_col)
     z_cols = [lag_col_name(s, i) for i in range(1, p + 1) for s in series]
-    cond = None
-    for c in [*z_cols, *series]:
-        pred = F.col(f"`{c}`").isNotNull()
-        cond = pred if cond is None else (cond & pred)
-    fm = compute_moments(vz.df.filter(cond), z_cols + series)
+    fm = compute_moments(na_omit(vz.df, z_cols + series), z_cols + series)
     xtx_n, xty_n, mx, my, xscale, yscale = _standardize_group(
         fm, z_cols, series, intercept, True, True
     )

@@ -45,7 +45,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-from ..operators.lag_embed import VarZ, lag_col_name, var_z
+from ..operators.lag_embed import VarZ, lag_col_name, na_omit, var_z
 from .elastic_net import EnetFit, cv_enet, enet_path
 from .gram import Moments, blocked_fold_column, compute_moments, moments_total
 
@@ -195,19 +195,16 @@ def fit_enet_var(
 
     vz = var_z(wide_df.select(date_col, *series), series, p, intercept=False, date_col=date_col)
     z_cols = [lag_col_name(s, i) for i in range(1, p + 1) for s in series]
-    cond = None
-    for c in [*z_cols, *series]:  # na.omit; backticks for dotted lag names
-        pred = F.col(f"`{c}`").isNotNull()
-        cond = pred if cond is None else (cond & pred)
     cols = z_cols + series
+    complete = na_omit(vz.df, cols)
     if lams is None:
-        frame = blocked_fold_column(vz.df.filter(cond), date_col, cv_block)
+        frame = blocked_fold_column(complete, date_col, cv_block)
         fold_moments = compute_moments(frame, cols, fold_col="__fold")
         total = moments_total(fold_moments)
     else:
         # fixed-λ path needs no CV folds — skip the fold-assignment
         # window pass entirely
-        total = compute_moments(vz.df.filter(cond), cols)
+        total = compute_moments(complete, cols)
         fold_moments = None
 
     fits: dict[str, EnetFit] = {}
@@ -265,9 +262,7 @@ def residual_frame(model: EnetVARModel):
 
     assert model.varz is not None, "fit with fit_enet_var to keep the frame"
     B = model.coef_matrix()
-    df = model.varz.df
-    for c in [*model.z_cols, *model.series]:
-        df = df.filter(F.col(f"`{c}`").isNotNull())
+    df = na_omit(model.varz.df, [*model.z_cols, *model.series])
     rows = model.row_names
     out_cols = [F.col(model.varz.date_col)]
     for j, s in enumerate(model.series):

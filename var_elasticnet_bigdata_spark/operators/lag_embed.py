@@ -66,6 +66,16 @@ class VarZ:
         return t_rows - self.p - self.k
 
 
+def na_omit(df: DataFrame, cols: list[str]) -> DataFrame:
+    """R ``na.omit`` over ``cols`` (Main.R:196): drop every row with a
+    NULL (or NaN) in any of them. ``dropna`` is one flat
+    ``AtLeastNNonNulls`` predicate, where a chain of ``isNotNull``
+    conjuncts nests one level per column and overflows the JVM stack
+    at a few hundred columns. Names are backtick-quoted so the dotted
+    ``<var>.l<i>`` lag names resolve as columns, not struct fields."""
+    return df.dropna(subset=[f"`{c}`" for c in cols])
+
+
 def var_z(
     df: DataFrame,
     series: list[str],

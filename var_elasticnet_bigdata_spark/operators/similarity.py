@@ -491,7 +491,7 @@ def _ivf_cell_rerank(
     )
     kk, dp = k, round_dp
 
-    def cell_topk(key, probe_pdf: pd.DataFrame, corpus_pdf: pd.DataFrame):
+    def cell_topk(key, probe_pdf, corpus_pdf):
         if not len(probe_pdf) or not len(corpus_pdf):
             return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []}).astype(
                 {"id_a": "int64", "id_b": "int64", "cosine": "float64"}

@@ -14,23 +14,32 @@ The reference loop, replicated:
             current column (na.pad)
       re-run the batch ADF
 
-Driver-side control flow issuing Spark jobs per round (SURVEY §3.1):
-each round is one batch-ADF pass (grouped applyInPandas) plus
-per-branch window transforms on the LONG frame — all partitioned by
-series_id, never a global sort. The transform history per series is
-returned so levels can be reconstructed (W7) and the pipeline is
-auditable.
+No decision in the loop reads another series, so each series' whole
+fixpoint runs inside one grouped pass instead of a driver loop of
+Spark jobs. The relational transforms run once, in Catalyst: one
+window per series gives the monthly diff, the monthly log-diff (log
+taken in the JVM) and the raw-level positivity flag side by side, and
+one aggregation rolls all three up to the quarter. A single
+``groupBy(series_id).applyInPandas`` then iterates ADF → branch →
+transform per series in NumPy, and the result is cached once. The
+transform history per series is returned so levels can be
+reconstructed (W7) and the pipeline is auditable.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+import numpy as np
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.stats import adf_table
+from ..functions.stats import adf_test_or_nan
+from ..plans.cachereg import swap_cache
 from . import timeseries as ts
+
+DIFF_QSUM = "diff_quarterly_sum"
+LOGDIFF_QSUM = "logdiff_quarterly_sum"
 
 
 @dataclass
@@ -57,16 +66,15 @@ def make_quarterly_diffs(
     return q.filter(F.col("obs_date") > F.lit(first_q))
 
 
-def _quarterly_logdiffs(
-    monthly_long: DataFrame, series: list[str], freq: str = "quarter"
-) -> DataFrame:
-    """Log-diff branch (Main.R:86-87): quarterly sum of monthly
-    log-diffs for the given series, first quarter dropped."""
-    sub = monthly_long.filter(F.col("series_id").isin(series))
-    ld = ts.log_diff(sub, out_col="value")
-    q = ts.resample(ld, freq=freq, how="sum", strict_na=True)
-    first_q = q.agg(F.min("obs_date")).collect()[0][0]
-    return q.filter(F.col("obs_date") > F.lit(first_q))
+def _non_stationary(x: np.ndarray, k: int | None, crit: float, flag_ge: bool) -> bool:
+    """The batch ADF's flag for one series (``adf_table`` semantics:
+    NULLs dropped, a degenerate series gets p = NaN and is flagged; a
+    series with no values is never tested)."""
+    x = x[~np.isnan(x)]
+    if not len(x):
+        return False
+    p = adf_test_or_nan(x, k=k)["p_value"]
+    return not (p < crit) if flag_ge else not (p <= crit)
 
 
 def stationarity_pipeline(
@@ -99,86 +107,97 @@ def stationarity_pipeline(
       positivity is left UNTRANSFORMED (no else-branch), relying on
       the no-progress loop guard. The golden numbers in
       Testing.R:227-243 were produced on THIS variant's ``end_var``.
+
+    Per series, a round either transforms the series or stops it:
+    it stops unflagged once its ADF passes, and flagged when it
+    reaches ``max_rounds`` or when its move is an idempotent no-op
+    (the Testing.R no-progress guard). ``rounds`` is the largest
+    per-series round count and ``still_non_stationary`` the series
+    flagged at their last test — the global loop's results, since it
+    runs until the last series stops. (The one exception needs
+    ``consume_currency`` without ``currency_fallback_diff``, which
+    neither reference variant uses: a non-positive currency series
+    spends round 1 losing its membership and goes on to diff, where
+    a global loop would stop if no other series moved in round 1.)
+    The log-diff replacement drops the input's first quarter, like
+    the initial transform.
     """
-    currency_pool = set(currency_series)
-    transforms: dict[str, list[str]] = {}
+    S, D, V = ts.SERIES, ts.DATE, ts.VALUE
+    pool = frozenset(currency_series)
 
-    # strictly-positive check uses RAW monthly levels (Main.R:72)
-    positive = {
-        r["series_id"]
-        for r in (
-            monthly_long.dropna(subset=["value"])
-            .groupBy("series_id")
-            .agg((F.min("value") > 0).alias("pos"))
-            .collect()
-        )
-        if r["pos"]
-    }
+    # strictly-positive check uses RAW monthly levels (Main.R:72): the
+    # series-wide min, carried as a 0/1 flag through the roll-up
+    whole = (
+        Window.partitionBy(S).orderBy(D)
+        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    )
+    monthly = ts.log_diff(ts.diff(monthly_long, out_col="d"), out_col="ld").withColumn(
+        "pos", (F.min(V).over(whole) > 0).cast("double")
+    )
+    q = ts.resample(
+        monthly, freq=resample_freq, how="sum", value_col=["d", "ld", "pos"],
+        strict_na=True,
+    )
+    first_q = monthly_long.agg(
+        F.min(ts.to_period(F.col(D), resample_freq))
+    ).collect()[0][0]
+    q = q.filter(F.col(D) > F.lit(first_q))
 
-    current = make_quarterly_diffs(monthly_long, freq=resample_freq)
-    for s in {r["series_id"] for r in current.select("series_id").distinct().collect()}:
-        transforms[s] = ["diff_quarterly_sum"]
-
-    rounds = 0
-    non_stat: list[str] = []
-    while rounds < max_rounds:
-        adf = adf_table(current.dropna(subset=["value"]), k=adf_k).collect()
-        if flag_ge:
-            non_stat = sorted(
-                r["series_id"] for r in adf if not (r["p_value"] < crit)
-            )
-        else:
-            non_stat = sorted(
-                r["series_id"] for r in adf if not (r["p_value"] <= crit)
-            )
-        if not non_stat:
-            break
-        log_branch, diff_branch = [], []
-        for s in non_stat:
-            if s in currency_pool:
-                if consume_currency:
-                    currency_pool.discard(s)  # membership consumed (Main.R:71)
-                if s in positive:
-                    log_branch.append(s)
-                elif currency_fallback_diff:
-                    diff_branch.append(s)
-                # else: Testing.R leaves it untransformed
+    def fixpoint(key, pdf):
+        pdf = pdf.sort_values(D)
+        cur = pdf["d"].to_numpy(dtype=float)
+        history = [DIFF_QSUM]
+        in_pool = key[0] in pool
+        positive = bool((pdf["pos"] > 0).any())
+        rounds, flagged = 0, False
+        for rnd in range(1, max_rounds + 1):
+            flagged = _non_stationary(cur, adf_k, crit, flag_ge)
+            if not flagged:
+                break
+            member = in_pool
+            if member and consume_currency:
+                in_pool = False  # membership consumed (Main.R:71)
+            if not member:
+                move = "diff"
+            elif positive:
+                move = None if history == [LOGDIFF_QSUM] else "log"
             else:
-                diff_branch.append(s)
-        # no-progress guard (Testing.R:88-93): if every remaining
-        # transform is an idempotent log-diff replay and nothing gets
-        # an extra diff, the loop cannot change the data — stop.
-        effective_log = [
-            s for s in log_branch
-            if transforms.get(s) != ["logdiff_quarterly_sum"]
-        ]
-        if not effective_log and not diff_branch:
-            break
-        rounds += 1
-        changed = set(effective_log) | set(diff_branch)
-        keep = current.filter(~F.col("series_id").isin(list(changed)))
-        log_branch = effective_log
-        parts = [keep]
-        if log_branch:
-            parts.append(
-                _quarterly_logdiffs(monthly_long, log_branch, resample_freq)
-            )
-            for s in log_branch:
-                transforms[s] = ["logdiff_quarterly_sum"]
-        if diff_branch:
-            sub = current.filter(F.col("series_id").isin(diff_branch))
-            parts.append(ts.diff(sub, out_col="value"))  # na.pad (Main.R:89)
-            for s in diff_branch:
-                transforms.setdefault(s, []).append("diff")
-        merged = parts[0]
-        for p in parts[1:]:
-            merged = merged.unionByName(p)
-        current = merged
+                # Testing.R leaves it untransformed
+                move = "diff" if currency_fallback_diff else None
+            if move is None:
+                if in_pool == member:
+                    break  # no-progress guard (Testing.R:88-93)
+                continue  # only the membership changed this round
+            rounds = rnd
+            if move == "log":
+                cur = pdf["ld"].to_numpy(dtype=float)
+                history = [LOGDIFF_QSUM]
+            else:
+                cur = np.concatenate(([np.nan], np.diff(cur)))  # na.pad (Main.R:89)
+                history.append("diff")
+        # the summary rides on each series' first row
+        return pdf[[S, D]].assign(
+            **{V: cur}, history=[history] + [None] * (len(pdf) - 1),
+            rounds=rounds, flagged=flagged,
+        )
+
+    schema = (
+        f"{S} string, {D} date, {V} double, history array<string>, "
+        "rounds int, flagged boolean"
+    )
+    # the summary collect is the cache's first reader and fills it
+    # whole (an eager count() before it would only add jobs)
+    staged = swap_cache(
+        "stationarity", q.groupBy(S).applyInPandas(fixpoint, schema)
+    )
+    summary = staged.filter(F.col("history").isNotNull()).select(
+        S, "history", "rounds", "flagged"
+    ).collect()
     return StationarityResult(
-        data=current,
-        transforms=transforms,
-        rounds=rounds,
-        still_non_stationary=non_stat,
+        data=staged.select(S, D, V),
+        transforms={r[S]: list(r["history"]) for r in summary},
+        rounds=max((r["rounds"] for r in summary), default=0),
+        still_non_stationary=sorted(r[S] for r in summary if r["flagged"]),
     )
 
 

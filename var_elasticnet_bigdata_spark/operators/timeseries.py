@@ -86,12 +86,14 @@ def resample(
     df: DataFrame,
     freq: str = "quarter",
     how: str = "sum",
-    value_col: str = VALUE,
+    value_col: str | list[str] = VALUE,
     series_col: str = SERIES,
     date_col: str = DATE,
     strict_na: bool = False,
 ) -> DataFrame:
     """Temporal roll-up (A1): monthly→quarterly aggregate per series.
+    A list of ``value_col`` names rolls each column up side by side in
+    the same aggregation.
 
     The reference sums monthly first-diffs per quarter (zoo default
     FUN, Main.R:43). Partial+final hash aggregation via Catalyst —
@@ -113,13 +115,15 @@ def resample(
         "min": F.min,
         "max": F.max,
     }[how]
+    cols = [value_col] if isinstance(value_col, str) else value_col
     gb = df.groupBy(series_col, to_period(F.col(date_col), freq).alias(date_col))
     if not strict_na:
-        return gb.agg(agg(value_col).alias(value_col))
+        return gb.agg(*(agg(c).alias(c) for c in cols))
     return gb.agg(
-        F.when(
-            F.count(F.lit(1)) == F.count(value_col), agg(value_col)
-        ).alias(value_col)
+        *(
+            F.when(F.count(F.lit(1)) == F.count(c), agg(c)).alias(c)
+            for c in cols
+        )
     )
 
 
