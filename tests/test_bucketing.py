@@ -17,6 +17,9 @@ from var_elasticnet_bigdata_spark.sources.bucketing import (
     write_bucketed,
 )
 
+from .conftest import SF_SMALL
+from .store_cases import STORE_CASES
+
 
 @pytest.fixture(scope="module")
 def bucketed_pair(spark, tmp_path_factory):
@@ -324,46 +327,42 @@ def test_compact_bucketed_store_merges_append_fragments(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-def test_incremental_bucketed_sink_hook_fires_before_store_append(spark, tmp_path):
+@pytest.mark.parametrize("case", STORE_CASES, ids=lambda c: c.name)
+def test_incremental_bucketed_sink_hook_fires_before_store_append(
+    spark, tmp_path, case
+):
     """ADVICE r5 (medium): the on_survivors hook must run BEFORE any
     store append — a caller sinking survivors in the hook gets
     at-least-once on crash+replay, never loss. Asserted by checking,
-    inside the hook, that the store does not yet hold the batch."""
-    from var_elasticnet_bigdata_spark.operators.dedup import (
-        incremental_near_dup_bucketed,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (i, " ".join(f"w{i}x{j}" for j in range(8)))
-            for i in range(6)
-        ],
-        "doc_id long, text string",
-    )
-    spark.sql("DROP TABLE IF EXISTS hook__bands")
-    spark.sql("DROP TABLE IF EXISTS hook__sigs")
+    inside the hook, that no store table holds the batch yet."""
+    store = f"hook_{case.name}"
+    tables = case.tables(store)
+    for t in tables:
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
     seen = {}
     try:
-        incremental_near_dup_bucketed(
-            docs.filter("doc_id < 3"), "hook", buckets=4,
-            path=str(tmp_path / "s1"),
+        case.run(
+            spark.createDataFrame(case.batch1, case.schema), store,
+            str(tmp_path / "s1"), None,
         )
-        n_store = spark.table("hook__sigs").count()
+        n_store = {t: spark.table(t).count() for t in tables}
 
         def hook(surv):
-            seen["rows"] = surv.count()
-            seen["store_at_hook"] = spark.table("hook__sigs").count()
+            seen["ids"] = {
+                r[0] for r in surv.select(case.id_col).distinct().collect()
+            }
+            seen["store_at_hook"] = {t: spark.table(t).count() for t in tables}
 
-        incremental_near_dup_bucketed(
-            docs.filter("doc_id >= 3"), "hook", buckets=4,
-            on_survivors=hook,
+        case.run(
+            spark.createDataFrame(case.batch2, case.schema), store, None, hook
         )
-        assert seen["rows"] == 3
+        assert seen["ids"] == case.survivors
         assert seen["store_at_hook"] == n_store  # batch NOT yet appended
-        assert spark.table("hook__sigs").count() == n_store + 3
+        for t in tables:
+            assert spark.table(t).count() > n_store[t]
     finally:
-        spark.sql("DROP TABLE IF EXISTS hook__bands")
-        spark.sql("DROP TABLE IF EXISTS hook__sigs")
+        for t in tables:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_incremental_bucketed_replay_after_sink_is_at_least_once(spark, tmp_path):
@@ -659,3 +658,24 @@ def test_append_emits_at_most_buckets_files(spark, tmp_path):
     ).executedPlan().toString()
     assert "Exchange" not in plan or "BroadcastExchange" in plan
     spark.sql("DROP TABLE IF EXISTS t_fcount")
+
+
+def test_store_query_reuses_one_store_dir_per_session(spark):
+    """`dedup_incremental_exact` re-creates its store on every run in
+    ONE directory per process: a fresh temp directory per run leaked
+    one store directory per invocation. The second run must still
+    start from an empty store (DROP TABLE + overwrite in place)."""
+    import glob
+    import os
+    import tempfile
+
+    from var_elasticnet_bigdata_spark.queries import dedup_incremental_exact
+
+    pattern = os.path.join(tempfile.gettempdir(), "spark_graft_exact_store_*")
+    before = set(glob.glob(pattern))
+    counts = [
+        dedup_incremental_exact(spark, SF_SMALL).count()
+        for _ in range(2)
+    ]
+    assert counts[0] == counts[1] > 0
+    assert len(set(glob.glob(pattern)) - before) <= 1

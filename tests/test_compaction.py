@@ -11,6 +11,8 @@ from var_elasticnet_bigdata_spark.sources.compaction import (
     dir_bytes,
 )
 
+from .store_cases import STORE_CASES
+
 
 def _fragmented(spark, path, n_files=64, rows=6400):
     (
@@ -126,63 +128,61 @@ def test_compact_partitioned_global_file_budget(spark, tmp_path):
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
-def test_crash_window_recovery_before_exists_probe(spark, tmp_path):
+@pytest.mark.parametrize("case", STORE_CASES, ids=lambda c: c.name)
+def test_crash_window_recovery_before_exists_probe(spark, tmp_path, case):
     """ADVICE r6 (medium): a crash inside compact_bucketed between
     DROP TABLE and the staging RENAME leaves only the __compacting
     table. The NEXT micro-batch's incremental operator used to probe
     tableExists first, see no store, OVERWRITE it with just that
-    batch's keys — and the following compaction then dropped the
-    orphaned staging table holding the full history. The operators
-    now recover the orphan BEFORE the exists-probe, so a replayed
-    batch dedups against the full recovered history."""
-    from var_elasticnet_bigdata_spark.operators.dedup import (
-        incremental_exact_dedup_bucketed,
-    )
+    batch's rows — and the following compaction then dropped the
+    orphaned staging table holding the full history. Opening the
+    store recovers every orphan BEFORE the exists-probe, so a
+    replayed batch dedups against the full recovered history."""
     from var_elasticnet_bigdata_spark.sources.bucketing import write_bucketed
     from var_elasticnet_bigdata_spark.sources.compaction import (
         recover_orphaned_compaction,
     )
 
-    docs = spark.createDataFrame(
-        [(0, "alpha beta"), (1, "gamma delta"), (2, "epsilon nine")],
-        "doc_id long, text string",
-    )
-    spark.sql("DROP TABLE IF EXISTS cwstore__keys")
-    spark.sql("DROP TABLE IF EXISTS cwstore__keys__compacting")
+    store = f"cw_{case.name}"
+    tables = case.tables(store)
+
+    def drop_all():
+        for t in tables:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+            spark.sql(f"DROP TABLE IF EXISTS {t}__compacting")
+
+    drop_all()
+    path = str(tmp_path / "store")
     try:
-        incremental_exact_dedup_bucketed(
-            docs, "cwstore", buckets=4, path=str(tmp_path / "store")
+        case.run(
+            spark.createDataFrame(case.batch1, case.schema), store, path, None
         )
-        # healthy store: recovery is a no-op
-        assert recover_orphaned_compaction(spark, "cwstore__keys") is False
-        # simulate the mid-compaction crash: full rewrite sits in the
-        # staging table, the target has been dropped, rename never ran
-        write_bucketed(
-            spark.table("cwstore__keys"),
-            "cwstore__keys__compacting",
-            "ck",
-            buckets=4,
-            sort_cols="ck",
-            path=str(tmp_path / "staging"),
-            mode="overwrite",
+        for i, t in enumerate(tables):
+            # healthy store: recovery is a no-op
+            assert recover_orphaned_compaction(spark, t) is False
+            # simulate the mid-compaction crash: full rewrite sits in
+            # the staging table, the target has been dropped, rename
+            # never ran
+            key = spark.table(t).columns[0]
+            write_bucketed(
+                spark.table(t), f"{t}__compacting", key, buckets=4,
+                sort_cols=key, path=str(tmp_path / f"staging{i}"),
+                mode="overwrite",
+            )
+            spark.sql(f"DROP TABLE {t}")
+        # replayed micro-batch: one duplicate of batch 1, one new item
+        surv = case.run(
+            spark.createDataFrame(case.batch2, case.schema), store, path, None
         )
-        spark.sql("DROP TABLE cwstore__keys")
-        # replayed micro-batch: doc 10 duplicates doc 0's content key
-        batch2 = spark.createDataFrame(
-            [(10, "ALPHA beta!"), (11, "fresh content")],
-            "doc_id long, text string",
-        )
-        surv = incremental_exact_dedup_bucketed(
-            batch2, "cwstore", buckets=4, path=str(tmp_path / "store")
-        )
-        assert sorted(r.doc_id for r in surv.collect()) == [11]
-        # the recovered store holds the FULL history plus the survivor
-        keys = spark.table("cwstore__keys")
-        assert sorted(r.doc_id for r in keys.collect()) == [0, 1, 2, 11]
-        assert not spark.catalog.tableExists("cwstore__keys__compacting")
+        got = {r[0] for r in surv.select(case.id_col).distinct().collect()}
+        assert got == case.survivors
+        # the recovered store holds the FULL history plus batch 2
+        last = spark.table(tables[-1]).select(case.id_col).distinct()
+        assert {r[0] for r in last.collect()} == case.stored
+        for t in tables:
+            assert not spark.catalog.tableExists(f"{t}__compacting")
     finally:
-        spark.sql("DROP TABLE IF EXISTS cwstore__keys")
-        spark.sql("DROP TABLE IF EXISTS cwstore__keys__compacting")
+        drop_all()
 
 
 def test_append_after_compaction_location_move(spark, tmp_path):

@@ -32,14 +32,17 @@ def artifacts():
 
 @pytest.fixture
 def clean_store(spark):
-    names = ["pqs1", "pqs2", "pqs3", "pqs4", "pqs5"]
-    for n in names:
-        spark.sql(f"DROP TABLE IF EXISTS {n}__pq")
-        spark.sql(f"DROP TABLE IF EXISTS {n}__pq_ledger")
+    names = ["pqs1", "pqs2", "pqs3", "pqs4", "pqs5", "pqs6"]
+    suffixes = ["__pq", "__pq_ledger", "__vec", "__vec__compacting"]
+
+    def drop():
+        for n in names:
+            for s in suffixes:
+                spark.sql(f"DROP TABLE IF EXISTS {n}{s}")
+
+    drop()
     yield
-    for n in names:
-        spark.sql(f"DROP TABLE IF EXISTS {n}__pq")
-        spark.sql(f"DROP TABLE IF EXISTS {n}__pq_ledger")
+    drop()
 
 
 def test_append_split_invariance(spark, tmp_path, clean_store, artifacts):
@@ -282,6 +285,45 @@ def test_crash_window_replay_serves_exactly_once(
         ids = [v for _, v in rows]
         assert ranks == list(range(1, len(rows) + 1)), (qid, rows)
         assert len(set(ids)) == len(ids), (qid, rows)
+
+
+def test_vector_sidecar_heals_after_crashed_compaction(
+    spark, tmp_path, clean_store, artifacts
+):
+    """A crash inside the ``__vec`` sidecar's compaction (after its
+    DROP TABLE, before the staging rename) leaves only
+    ``__vec__compacting`` registered. The next append must recover
+    it before probing the sidecar: probing first saw no sidecar,
+    overwrote it with that batch alone, and left the staging table
+    holding the history for the next compaction to drop."""
+    from var_elasticnet_bigdata_spark.operators.similarity import (
+        ivfpq_postings_append,
+    )
+    from var_elasticnet_bigdata_spark.sources import load_table
+    from var_elasticnet_bigdata_spark.sources.bucketing import write_bucketed
+
+    C, cb = artifacts
+    e = load_table(spark, SF, "embeddings")
+    ivfpq_postings_append(
+        e.filter("vec_id < 250"), "pqs6", C, cb, buckets=4,
+        path=str(tmp_path), fresh=True, store_vectors=True,
+    )
+    write_bucketed(
+        spark.table("pqs6__vec"), "pqs6__vec__compacting", "cell",
+        buckets=4, sort_cols="cell", path=str(tmp_path / "staging"),
+        mode="overwrite",
+    )
+    spark.sql("DROP TABLE pqs6__vec")
+    ivfpq_postings_append(
+        e.filter("vec_id >= 250"), "pqs6", C, cb, buckets=4,
+        path=str(tmp_path), store_vectors=True,
+    )
+    assert not spark.catalog.tableExists("pqs6__vec__compacting")
+    n = e.count()
+    assert spark.table("pqs6__pq").count() == n
+    vec_ids = spark.table("pqs6__vec").select("vec_id")
+    assert vec_ids.count() == n
+    assert vec_ids.filter("vec_id < 250").count() == 250
 
 
 def test_stream_postings_append_exactly_once(

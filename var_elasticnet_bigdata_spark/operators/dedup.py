@@ -31,7 +31,15 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..plans.cachereg import swap_cache
-from ..sources.compaction import recover_orphaned_compaction
+from ..sources.bucketing import BucketedStore
+
+# table suffixes of the incremental stores in this module, in write
+# order (`sources.bucketing.BucketedStore`)
+EXACT_STORE = ("__keys",)
+NEAR_DUP_STORE = ("__sigs", "__bands")
+SUBSTRING_STORE = ("__psh",)
+FINGERPRINT_STORE = ("__fpb",)
+VIDEO_STORE = ("__vfpb",)
 
 # fixed MinHash permutation coefficients (numpy default_rng(777))
 MINHASH_P = 2147483647  # 2^31 − 1
@@ -632,11 +640,11 @@ def incremental_substring_dedup_bucketed(
     fresh: bool = False,
 ) -> DataFrame:
     """Substring dedup of a NEW batch against ALL previously seen
-    documents via a persisted positional-shingle store — the fourth
-    member of the incremental-store family (exact keys / MinHash
-    bands / semantic cells / THIS): each crawl batch is checked for a
-    ≥``min_run_tokens``-token verbatim run against the whole accepted
-    history without re-reading any earlier batch's text.
+    documents via a persisted positional-shingle store (one of the
+    seven incremental stores, `sources.bucketing`): each crawl batch
+    is checked for a ≥``min_run_tokens``-token verbatim run against
+    the whole accepted history without re-reading any earlier
+    batch's text.
 
     The store ``{store_name}__psh`` holds ``(s, id_col, pos)`` —
     every seen document's positional ``width``-gram shingle hashes —
@@ -657,12 +665,10 @@ def incremental_substring_dedup_bucketed(
     scan) and applied to BOTH match arms — boilerplate runs stay the
     MinHash pass's job and the join stays linear as history grows.
 
-    Crash contract (same as the sibling stores):
-    `recover_orphaned_compaction` heals a mid-compaction crash before
-    the exists-probe; ``on_survivors`` fires before the store append
-    (at-least-once — a replayed batch re-matches its own history and
-    re-drops; duplicate match rows from a replayed append are
-    deduplicated before run counting so island lengths stay exact).
+    Crash contract: the store contract in `sources.bucketing` (a
+    replayed batch re-matches its own history and re-drops; duplicate
+    match rows from a replayed append are deduplicated before run
+    counting so island lengths stay exact).
 
     ``fresh=True`` starts a NEW store lineage on this batch: a
     leftover table from an earlier run is ignored as history and the
@@ -672,9 +678,9 @@ def incremental_substring_dedup_bucketed(
     noise and forced a slack baseline pin).
     """
     spark = batch.sparkSession
-    psh_t = f"{store_name}__psh"
-    recover_orphaned_compaction(spark, psh_t)
-    exists = spark.catalog.tableExists(psh_t) and not fresh
+    store = BucketedStore(
+        spark, store_name, SUBSTRING_STORE, buckets, path, fresh
+    )
 
     ps = swap_cache(
         "dedup.incremental_substring_psh",
@@ -695,9 +701,9 @@ def incremental_substring_dedup_bucketed(
     # whose true distinct-doc count sits in (max/2, max] got gated out
     # only on replay and the replayed batch could KEEP docs it
     # originally dropped (ADVICE r8 #1, medium).
-    if exists:
-        store = spark.table(psh_t)
-        probed = store.join(
+    if store.exists:
+        hist = spark.table(store.tables[0])
+        probed = hist.join(
             F.broadcast(ps.select("s").distinct()), "s", "left_semi"
         ).select("s", id_col)
         seen = ps.select("s", id_col).unionByName(probed)
@@ -737,8 +743,8 @@ def incremental_substring_dedup_bucketed(
             (F.col("pb") - F.col("pa")).alias("diag"),
         )
     )
-    if exists:
-        part_s = store.join(keep, "s", "left_semi").select(
+    if store.exists:
+        part_s = hist.join(keep, "s", "left_semi").select(
             F.col(id_col).alias("doc_a"), F.col("pos").alias("pa"), "s"
         )
         m_store = (
@@ -761,28 +767,15 @@ def incremental_substring_dedup_bucketed(
         .groupBy("doc_a", "doc_b", "diag", "__g")
         .agg(F.count(F.lit(1)).alias("__run"))
     )
-    drops = (
-        runs.filter(F.col("__run") + F.lit(width - 1) >= min_run_tokens)
-        .select(F.col("doc_b").alias(id_col))
-        .distinct()
-        .localCheckpoint(eager=True)
+    dropped = runs.filter(
+        F.col("__run") + F.lit(width - 1) >= min_run_tokens
+    ).select(F.col("doc_b").alias(id_col))
+    # seen-set: every batch row's shingles append, dropped or not
+    return store.commit(
+        batch, id_col, dropped,
+        lambda _drops: [ps.select("s", id_col, "pos")],
+        on_survivors,
     )
-    survivors = batch.join(drops, id_col, "left_anti")
-    if on_survivors is not None:
-        on_survivors(survivors)
-
-    from ..sources.bucketing import write_bucketed
-
-    write_bucketed(
-        ps.select("s", id_col, "pos"),
-        psh_t,
-        "s",
-        buckets=buckets,
-        sort_cols="s",
-        path=None if path is None else f"{path}/{psh_t}",
-        mode="append" if exists else "overwrite",
-    )
-    return survivors
 
 
 def duck_incremental_substring_sql(
@@ -1096,6 +1089,36 @@ def bucket_pair_expr(star_over: int | None) -> str:
     )
 
 
+def _band_bits(bits: int, bands: int, max_hamming: int) -> int:
+    """Width of one band of a ``bits``-wide fingerprint cut into
+    ``bands`` bands. Raises unless the bands tile the hash and the
+    pigeonhole guarantee holds (``max_hamming < bands``)."""
+    if bits % bands != 0:
+        raise ValueError(f"bits={bits} not divisible by bands={bands}")
+    if max_hamming >= bands:
+        raise ValueError(
+            f"max_hamming={max_hamming} >= bands={bands}: the pigeonhole "
+            "guarantee needs more bands than tolerated bit flips"
+        )
+    return bits // bands
+
+
+def _band_keys(
+    hash_col: str, bits: int, bands: int, max_hamming: int
+) -> Column:
+    """The ``bands`` composite band keys ``band_idx << band_bits |
+    band_val`` of an int64 fingerprint column, as an array (validated
+    by `_band_bits`). ``band_val < 2^band_bits``, so each composite is
+    one uniform int64 join key — the ``bk`` of the banded stores."""
+    band_bits = _band_bits(bits, bands, max_hamming)
+    mask = (1 << band_bits) - 1
+    return F.expr(
+        f"transform(sequence(0, {bands - 1}),"
+        f" b -> (cast(b as bigint) << {band_bits})"
+        f" | (shiftright({hash_col}, b * {band_bits}) & {mask}))"
+    )
+
+
 def hamming_near_dup_pairs(
     hashed: DataFrame,
     id_col: str = "doc_id",
@@ -1127,14 +1150,7 @@ def hamming_near_dup_pairs(
     against the corpus. Band extraction is an arithmetic shift + mask,
     identical on signed int64 in Spark and DuckDB (the mask discards
     the sign-fill bits on both engines)."""
-    if bits % bands != 0:
-        raise ValueError(f"bits={bits} not divisible by bands={bands}")
-    if max_hamming >= bands:
-        raise ValueError(
-            f"max_hamming={max_hamming} >= bands={bands}: the pigeonhole "
-            "guarantee needs more bands than tolerated bit flips"
-        )
-    band_bits = bits // bands
+    band_bits = _band_bits(bits, bands, max_hamming)
     mask = (1 << band_bits) - 1
     banded = hashed.select(
         F.col(id_col),
@@ -1376,25 +1392,15 @@ def stills_against_video_store(
     Hamming verify emits ``(still_id, video_id, frame_idx,
     hamming)`` distinct. Lookup cost ∝ stills × bands + probed
     store rows — independent of total store size."""
-    if bits % bands != 0:
-        raise ValueError(f"bits={bits} not divisible by bands={bands}")
+    keys = _band_keys(hash_col, bits, bands, max_hamming)
     spark = stills.sparkSession
-    vfpb = f"{store_name}__vfpb"
-    recover_orphaned_compaction(spark, vfpb)
-    band_bits = bits // bands
-    mask = (1 << band_bits) - 1
+    (vfpb,) = BucketedStore(spark, store_name, VIDEO_STORE).tables
     sb = swap_cache(
         "dedup.stills_vs_store_bands",
         stills.select(
             F.col(still_id_col).alias("__sid"),
             F.col(hash_col).alias("__sh"),
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, {bands - 1}),"
-                    f" b -> (cast(b as bigint) << {band_bits})"
-                    f" | (shiftright({hash_col}, b * {band_bits}) & {mask}))"
-                )
-            ).alias("bk"),
+            F.explode(keys).alias("bk"),
         ),
     )
     bks = sb.select("bk").distinct()
@@ -1452,9 +1458,9 @@ def incremental_video_dedup_bucketed(
     on_survivors=None,
     fresh: bool = False,
 ) -> DataFrame:
-    """VIDEO dedup of a NEW batch against ALL accepted history — the
-    SIXTH member of the incremental-store family, composing the
-    frame-SET near-dup rule (`video_near_dup_pairs`) with the banded
+    """VIDEO dedup of a NEW batch against ALL accepted history — one
+    of the seven incremental stores (`sources.bucketing`), composing
+    the frame-SET near-dup rule (`video_near_dup_pairs`) with the banded
     fingerprint store shape (`incremental_fingerprint_dedup_bucketed`):
     a batch video drops iff ≥ ``min_matching_frames`` DISTINCT frame
     pairs match (Hamming ≤ ``max_hamming``) against a LOWER-id batch
@@ -1474,49 +1480,31 @@ def incremental_video_dedup_bucketed(
 
     Input is the FRAME fingerprint table (`video_frame_dhash` output),
     not payloads — hashing stays the caller's narrow pass. Crash
-    contract identical to the sibling stores: compaction recovery
-    before the exists-probe, drops pinned by eager localCheckpoint
-    BEFORE the append, ``on_survivors`` (receives the surviving
-    frame rows) fires before the append — sink-first, at-least-once;
-    a replayed batch re-matches the store per-frame and re-drops.
+    contract: the store contract in `sources.bucketing`
+    (``on_survivors`` receives the surviving frame rows; a replayed
+    batch re-matches the store per-frame and re-drops).
     Returns the surviving frame rows (all frames of surviving docs)."""
-    if bits % bands != 0:
-        raise ValueError(f"bits={bits} not divisible by bands={bands}")
-    if max_hamming >= bands:
-        raise ValueError(
-            f"max_hamming={max_hamming} >= bands={bands}: the pigeonhole "
-            "guarantee needs more bands than tolerated bit flips"
-        )
+    keys = _band_keys(hash_col, bits, bands, max_hamming)
     spark = frames.sparkSession
-    vfpb_t = f"{store_name}__vfpb"
-    recover_orphaned_compaction(spark, vfpb_t)
-    exists = spark.catalog.tableExists(vfpb_t) and not fresh
+    store = BucketedStore(spark, store_name, VIDEO_STORE, buckets, path, fresh)
 
-    band_bits = bits // bands
-    mask = (1 << band_bits) - 1
     banded = swap_cache(
         "dedup.incremental_vfp_bands",
         frames.select(
             F.col(id_col),
             F.col(frame_col),
             F.col(hash_col).alias("h"),
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, {bands - 1}),"
-                    f" b -> (cast(b as bigint) << {band_bits})"
-                    f" | (shiftright({hash_col}, b * {band_bits}) & {mask}))"
-                )
-            ).alias("bk"),
+            F.explode(keys).alias("bk"),
         ),
     )
     batch_bks = banded.select("bk").distinct()
     fident = F.concat_ws(":", F.col(id_col), F.col(frame_col))
     gate_rows = banded.select("bk", fident.alias("fid"))
     store_hits = None
-    if exists:
+    if store.exists:
         store_hits = swap_cache(
             "dedup.incremental_vfp_store_hits",
-            spark.table(vfpb_t).join(F.broadcast(batch_bks), "bk"),
+            spark.table(store.tables[0]).join(F.broadcast(batch_bks), "bk"),
         )
         gate_rows = gate_rows.unionByName(
             store_hits.select("bk", fident.alias("fid"))
@@ -1557,7 +1545,7 @@ def incremental_video_dedup_bucketed(
         .filter(F.expr(ham))
     )
     dropped = in_batch
-    if exists:
+    if store.exists:
         vs_store = rollup(
             store_hits.select(
                 "bk", F.col(id_col).alias("doc_a"),
@@ -1568,25 +1556,15 @@ def incremental_video_dedup_bucketed(
             .filter(F.expr(ham))
         )
         dropped = dropped.unionByName(vs_store)
-    drops = dropped.distinct().localCheckpoint(eager=True)
-    survivors = frames.join(drops, id_col, "left_anti")
-    if on_survivors is not None:
-        on_survivors(survivors)
-
-    from ..sources.bucketing import write_bucketed
-
-    write_bucketed(
-        banded.join(drops, id_col, "left_anti").select(
-            "bk", id_col, frame_col, "h"
-        ),
-        vfpb_t,
-        "bk",
-        buckets=buckets,
-        sort_cols="bk",
-        path=None if path is None else f"{path}/{vfpb_t}",
-        mode="append" if exists else "overwrite",
+    return store.commit(
+        frames, id_col, dropped,
+        lambda drops: [
+            banded.join(drops, id_col, "left_anti").select(
+                "bk", id_col, frame_col, "h"
+            )
+        ],
+        on_survivors,
     )
-    return survivors
 
 
 def jaccard_pairs(
@@ -2083,16 +2061,14 @@ def incremental_near_dup_bucketed(
     returned frame re-reads nothing from the batch lineage.
 
     ``on_survivors``, if given, is called with the survivors frame
-    AFTER the drop set is pinned but BEFORE anything is appended to
-    the store — the hook is where a caller must commit survivors to
-    its own downstream sink (see ``streaming.dedup``). Ordering is
-    the crash-safety contract: a caller that sinks AFTER this call
+    before anything is appended to the store — the hook is where a
+    caller must commit survivors to its own downstream sink (see
+    ``streaming.dedup`` and the store contract in
+    `sources.bucketing`). A caller that sinks AFTER this call
     returns has a window where the store already holds the batch's
     rows but the sink does not; a replay of that batch would then
     self-match the store (Jaccard 1.0) and silently drop the
-    documents from the sink forever. With the hook, a crash anywhere
-    after the sink write degrades to at-least-once (duplicate sink
-    rows on replay), never to loss.
+    documents from the sink forever.
 
     Crash-recovery invariant for the store itself: sigs are appended
     BEFORE bands. A crash between the two leaves orphan signature
@@ -2105,13 +2081,8 @@ def incremental_near_dup_bucketed(
     present implies sigs present.
     """
     spark = batch.sparkSession
-    bands_t = f"{store_name}__bands"
-    sigs_t = f"{store_name}__sigs"
-    # heal a mid-compaction crash BEFORE the exists-probe (see
-    # incremental_exact_dedup_bucketed for the loss scenario)
-    recover_orphaned_compaction(spark, sigs_t)
-    recover_orphaned_compaction(spark, bands_t)
-    exists = spark.catalog.tableExists(bands_t)
+    store = BucketedStore(spark, store_name, NEAR_DUP_STORE, buckets, path)
+    sigs_t, bands_t = store.tables
 
     sigged = swap_cache(
         "dedup.incremental_bucketed_sigs",
@@ -2158,7 +2129,7 @@ def incremental_near_dup_bucketed(
         F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")
     )
     dropped = _verify(in_batch.distinct(), a_batch)
-    if exists:
+    if store.exists:
         # store side of BOTH joins is bucketed on the join key: the
         # band join clusters on bk, the shingle lookup on id — no
         # store-side Exchange (scan_ancestry-asserted in tests)
@@ -2173,50 +2144,23 @@ def incremental_near_dup_bucketed(
             F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")
         )
         dropped = dropped.unionByName(_verify(vs_store, a_store))
-    # drops must be pinned BEFORE the append below: the plan reads the
-    # store tables, and the append adds this batch's survivors to them
-    # — a lazy re-evaluation after the write would match survivors
-    # against themselves and drop everything. localCheckpoint(eager)
-    # severs the table lineage at pre-append state; the frame is just
-    # the dropped ids, so the materialization is small.
-    drops = (
-        dropped.select(F.col("id_b").alias(id_col))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    surv_rows = sigged.join(drops, id_col, "left_anti")
-    survivors = batch.join(drops, id_col, "left_anti")
-    if on_survivors is not None:
-        # sink-before-store: see docstring crash-safety contract
-        on_survivors(survivors)
 
-    from ..sources.bucketing import write_bucketed
+    def store_rows(drops: DataFrame) -> list[DataFrame]:
+        # sigs BEFORE bands (recovery invariant in the docstring):
+        # bands rows are the candidate source, so they must never
+        # exist without their verify-side sig rows
+        surv_rows = sigged.join(drops, id_col, "left_anti")
+        return [
+            surv_rows.select(id_col, "sig", "sh"),
+            surv_rows.select(id_col, F.explode(F.expr(bk)).alias("bk")).select(
+                "bk", id_col
+            ),
+        ]
 
-    mode = "append" if exists else "overwrite"
-    # sigs BEFORE bands (recovery invariant in the docstring): bands
-    # rows are the candidate source, so they must never exist without
-    # their verify-side sig rows
-    write_bucketed(
-        surv_rows.select(id_col, "sig", "sh"),
-        sigs_t,
-        id_col,
-        buckets=buckets,
-        sort_cols=id_col,
-        path=None if path is None else f"{path}/{sigs_t}",
-        mode=mode,
+    return store.commit(
+        batch, id_col, dropped.select(F.col("id_b").alias(id_col)),
+        store_rows, on_survivors,
     )
-    write_bucketed(
-        surv_rows.select(id_col, F.explode(F.expr(bk)).alias("bk")).select(
-            "bk", id_col
-        ),
-        bands_t,
-        "bk",
-        buckets=buckets,
-        sort_cols="bk",
-        path=None if path is None else f"{path}/{bands_t}",
-        mode=mode,
-    )
-    return survivors
 
 
 def _sig_expr(num_hashes: int) -> str:
@@ -2256,20 +2200,12 @@ def incremental_exact_dedup_bucketed(
     `exact_dedup` over store ∪ batch when batch ids exceed store ids
     (the append-only case; pinned in tests).
 
-    ``on_survivors`` fires after the drop set is pinned and BEFORE
-    the store append — same crash-safety contract as the near-dup
-    store (sink first ⇒ at-least-once, never loss; a replayed batch
-    self-matches the store and drops, so the survivor set stays
-    correct).
+    Crash contract: the store contract in `sources.bucketing` (a
+    replayed batch self-matches the store and drops, so the survivor
+    set stays correct).
     """
     spark = batch.sparkSession
-    keys_t = f"{store_name}__keys"
-    # heal a mid-compaction crash BEFORE the exists-probe (ADVICE r6):
-    # otherwise this probe sees no keys table, overwrites the store
-    # with only this batch, and the orphaned staging table holding the
-    # full history is dropped by the next compaction.
-    recover_orphaned_compaction(spark, keys_t)
-    exists = spark.catalog.tableExists(keys_t)
+    store = BucketedStore(spark, store_name, EXACT_STORE, buckets, path)
 
     keyed = swap_cache(
         "dedup.incremental_exact_keys",
@@ -2281,36 +2217,23 @@ def incremental_exact_dedup_bucketed(
         .filter(F.col(id_col) != F.col("__min_id"))
         .select(id_col)
     )
-    if exists:
+    if store.exists:
         vs_store = (
             keyed.join(
-                spark.table(keys_t).select("ck"),
+                spark.table(store.tables[0]).select("ck"),
                 "ck",
             ).select(id_col)
         )
         dropped = dup_in_batch.unionByName(vs_store)
     else:
         dropped = dup_in_batch
-    # pinned BEFORE the append: the survivors/anti-join plan reads the
-    # store table and the append adds this batch's keys to it — lazy
-    # re-evaluation after the write would self-match and drop all
-    drops = dropped.distinct().localCheckpoint(eager=True)
-    survivors = batch.join(drops, id_col, "left_anti")
-    if on_survivors is not None:
-        on_survivors(survivors)
-
-    from ..sources.bucketing import write_bucketed
-
-    write_bucketed(
-        keyed.join(drops, id_col, "left_anti").select("ck", id_col),
-        keys_t,
-        "ck",
-        buckets=buckets,
-        sort_cols="ck",
-        path=None if path is None else f"{path}/{keys_t}",
-        mode="append" if exists else "overwrite",
+    return store.commit(
+        batch, id_col, dropped,
+        lambda drops: [
+            keyed.join(drops, id_col, "left_anti").select("ck", id_col)
+        ],
+        on_survivors,
     )
-    return survivors
 
 
 def incremental_fingerprint_dedup_bucketed(
@@ -2328,10 +2251,9 @@ def incremental_fingerprint_dedup_bucketed(
     fresh: bool = False,
 ) -> DataFrame:
     """Perceptual-fingerprint dedup of a NEW batch against ALL
-    accepted history via a persisted banded-fingerprint store — the
-    FIFTH member of the incremental-store family (exact keys /
-    MinHash bands / semantic cells / positional shingles / THIS),
-    and the incremental form the image/audio fingerprint modalities
+    accepted history via a persisted banded-fingerprint store — one
+    of the seven incremental stores (`sources.bucketing`), and the
+    incremental form the image/audio fingerprint modalities
     need: each crawl batch's 64-bit fingerprints (`image_dhash`,
     `audio_fingerprint`, `simhash`) are checked within
     ``max_hamming`` of the whole accepted corpus without re-hashing
@@ -2362,53 +2284,34 @@ def incremental_fingerprint_dedup_bucketed(
     and the gate is what bounds in-bucket pair expansion as history
     grows.
 
-    Crash contract (same as the sibling stores):
-    `recover_orphaned_compaction` heals a mid-compaction crash before
-    the exists-probe; drops pin via eager localCheckpoint BEFORE the
-    append (a lazy re-evaluation after the write would self-match the
-    batch and drop everything); ``on_survivors`` fires before the
-    append (sink-first ⇒ at-least-once, never loss — a replayed
-    batch re-matches the store and re-drops). ``fresh=True`` starts a
-    new store lineage in place (one metastore op, the VERDICT-r8
-    noise discipline)."""
-    if bits % bands != 0:
-        raise ValueError(f"bits={bits} not divisible by bands={bands}")
-    if max_hamming >= bands:
-        raise ValueError(
-            f"max_hamming={max_hamming} >= bands={bands}: the pigeonhole "
-            "guarantee needs more bands than tolerated bit flips"
-        )
+    Crash contract: the store contract in `sources.bucketing` (a
+    replayed batch re-matches the store and re-drops). ``fresh=True``
+    starts a new store lineage in place (one metastore op, the
+    VERDICT-r8 noise discipline)."""
+    keys = _band_keys(hash_col, bits, bands, max_hamming)
     spark = batch.sparkSession
-    fpb_t = f"{store_name}__fpb"
-    recover_orphaned_compaction(spark, fpb_t)
-    exists = spark.catalog.tableExists(fpb_t) and not fresh
+    store = BucketedStore(
+        spark, store_name, FINGERPRINT_STORE, buckets, path, fresh
+    )
 
-    band_bits = bits // bands
-    mask = (1 << band_bits) - 1
     banded = swap_cache(
         "dedup.incremental_fp_bands",
         batch.select(
             F.col(id_col),
             F.col(hash_col).alias("h"),
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, {bands - 1}),"
-                    f" b -> (cast(b as bigint) << {band_bits})"
-                    f" | (shiftright({hash_col}, b * {band_bits}) & {mask}))"
-                )
-            ).alias("bk"),
+            F.explode(keys).alias("bk"),
         ),
     )
     batch_bks = banded.select("bk").distinct()
     gate_rows = banded.select("bk", F.col(id_col).alias("id"))
     store_hits = None
-    if exists:
+    if store.exists:
         # ONE bucket-pruned store scan (broadcast semi on the batch's
         # bk set — no store-side Exchange) feeds both the gate count
         # and the match arm
         store_hits = swap_cache(
             "dedup.incremental_fp_store_hits",
-            spark.table(fpb_t).join(F.broadcast(batch_bks), "bk"),
+            spark.table(store.tables[0]).join(F.broadcast(batch_bks), "bk"),
         )
         gate_rows = gate_rows.unionByName(
             store_hits.select("bk", F.col(id_col).alias("id"))
@@ -2440,7 +2343,7 @@ def incremental_fingerprint_dedup_bucketed(
         .select("id_b")
     )
     dropped = in_batch
-    if exists:
+    if store.exists:
         vs_store = (
             store_hits.select(
                 F.col("bk"), F.col(id_col).alias("id_a"),
@@ -2452,24 +2355,10 @@ def incremental_fingerprint_dedup_bucketed(
             .select("id_b")
         )
         dropped = dropped.unionByName(vs_store)
-    drops = (
-        dropped.select(F.col("id_b").alias(id_col))
-        .distinct()
-        .localCheckpoint(eager=True)
+    return store.commit(
+        batch, id_col, dropped.select(F.col("id_b").alias(id_col)),
+        lambda drops: [
+            banded.join(drops, id_col, "left_anti").select("bk", id_col, "h")
+        ],
+        on_survivors,
     )
-    survivors = batch.join(drops, id_col, "left_anti")
-    if on_survivors is not None:
-        on_survivors(survivors)
-
-    from ..sources.bucketing import write_bucketed
-
-    write_bucketed(
-        banded.join(drops, id_col, "left_anti").select("bk", id_col, "h"),
-        fpb_t,
-        "bk",
-        buckets=buckets,
-        sort_cols="bk",
-        path=None if path is None else f"{path}/{fpb_t}",
-        mode="append" if exists else "overwrite",
-    )
-    return survivors

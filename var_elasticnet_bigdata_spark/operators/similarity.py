@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.cachereg import swap_cache
+from ..sources.bucketing import BucketedStore
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
@@ -35,6 +36,13 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+# table suffixes of the incremental stores in this module, in write
+# order (`sources.bucketing.BucketedStore`); the IVF-PQ postings keep
+# their optional exact-vector sidecar as a store of its own
+SEMANTIC_STORE = ("__vecs",)
+POSTINGS_STORE = ("__pq",)
+VECTOR_SIDECAR = ("__vec",)
 
 LSH_SEED = 20260813
 
@@ -1361,10 +1369,10 @@ def incremental_semantic_dedup_bucketed(
     fresh: bool = False,
 ) -> DataFrame:
     """Incremental SemDeDup against a persisted per-cell vector store
-    — the semantic member of the incremental-dedup trio (exact key
-    store, MinHash band store, and this): each new batch of vectors
-    is checked against ALL previously seen same-cell vectors without
-    ever re-reading old batches' source data.
+    — one of the seven incremental stores (`sources.bucketing`): each
+    new batch of vectors is checked against ALL previously seen
+    same-cell vectors without ever re-reading old batches' source
+    data.
 
     The store ``{store_name}__vecs`` holds ``(cell, id_col, e)``
     (JVM-fold-normalized vectors) BUCKETED on ``cell``, so the
@@ -1383,24 +1391,20 @@ def incremental_semantic_dedup_bucketed(
     ``centroids`` must be FIXED across batches (train once up front
     — `kmeans_train` or `seed_centroids` on a reference corpus).
 
-    ``on_survivors`` fires after the drop set is pinned and BEFORE
-    the store append — the same sink-before-store crash contract as
-    the other incremental stores (replay duplicates the sink,
-    self-matches the store, never loses a document).
+    Crash contract: the store contract in `sources.bucketing` (replay
+    duplicates the sink, self-matches the store, never loses a
+    document).
     """
     spark = batch.sparkSession
-    vecs_t = f"{store_name}__vecs"
-    # heal a mid-compaction crash BEFORE the exists-probe (see
-    # dedup.incremental_exact_dedup_bucketed for the loss scenario)
-    from ..sources.compaction import recover_orphaned_compaction
-
     # ``fresh=True`` rebuilds the store in place (overwrite on the
     # first batch) — the noise-discipline contract of the other
     # incremental stores (VERDICT r8 item 5): callers that re-create
     # their store per run reuse ONE table+path instead of paying a
     # DROP TABLE + mkdtemp round per invocation.
-    recover_orphaned_compaction(spark, vecs_t)
-    exists = spark.catalog.tableExists(vecs_t) and not fresh
+    store = BucketedStore(
+        spark, store_name, SEMANTIC_STORE, buckets, path, fresh
+    )
+    (vecs_t,) = store.tables
 
     from ..plans.spread import spread_to_cores
 
@@ -1441,7 +1445,7 @@ def incremental_semantic_dedup_bucketed(
         .select(id_col)
     )
     dropped = in_batch
-    if exists:
+    if store.exists:
         # the SAME loud cell-budget contract as `semantic_dedup`
         # (VERDICT r6 item 5), now on the GROWING side: the store×
         # batch candidate join does store_cell × batch_cell work per
@@ -1495,23 +1499,12 @@ def incremental_semantic_dedup_bucketed(
             .select(F.col("__id_b").alias(id_col))
         )
         dropped = dropped.unionByName(vs_store)
-    drops = dropped.distinct().localCheckpoint(eager=True)
-    survivors = batch.join(drops, id_col, "left_anti")
-    if on_survivors is not None:
-        on_survivors(survivors)
-
-    from ..sources.bucketing import write_bucketed
-
-    write_bucketed(
-        staged.select("cell", id_col, "e"),
-        vecs_t,
-        "cell",
-        buckets=buckets,
-        sort_cols="cell",
-        path=None if path is None else f"{path}/{vecs_t}",
-        mode="append" if exists else "overwrite",
+    # seen-set: every batch vector appends, dropped or not
+    return store.commit(
+        batch, id_col, dropped,
+        lambda _drops: [staged.select("cell", id_col, "e")],
+        on_survivors,
     )
-    return survivors
 
 
 def pq_seed_codebook(
@@ -2109,8 +2102,10 @@ def ivfpq_postings_append(
     (normalize → assign → residual → `pq_encode` with constant-folded
     artifacts — one narrow JVM pass), so postings written across ANY
     batch split are bit-identical to a one-shot encode of the union:
-    append order cannot change a single code. Same crash contract as
-    the dedup stores: compaction recovery before the exists-probe.
+    append order cannot change a single code. Step 1 of the store
+    contract (`sources.bucketing`) runs for the postings AND the
+    vector sidecar on every call, so a crash inside either table's
+    compaction heals before the next append probes it.
 
     EXACTLY-ONCE replay contract (r11, VERDICT r10 item 1): when the
     caller keys batches with ``batch_id``, a committed-batch ledger
@@ -2137,22 +2132,20 @@ def ivfpq_postings_append(
     crash-window double append.
 
     Returns True if the batch was applied, False on a ledger no-op."""
-    from ..sources.bucketing import write_bucketed
-    from ..sources.compaction import recover_orphaned_compaction
-
     spark = batch.sparkSession
-    t = f"{store_name}__pq"
+    postings = BucketedStore(
+        spark, store_name, POSTINGS_STORE, buckets, path, fresh
+    )
+    vectors = BucketedStore(
+        spark, store_name, VECTOR_SIDECAR, buckets, path, fresh
+    )
     ledger = f"{store_name}__pq_ledger"
-    recover_orphaned_compaction(spark, t)
-    exists = spark.catalog.tableExists(t) and not fresh
-    if fresh and spark.catalog.tableExists(ledger):
-        spark.sql(f"DROP TABLE {ledger}")
-    if fresh and not store_vectors and spark.catalog.tableExists(
-        f"{store_name}__vec"
-    ):
+    if fresh:
+        spark.sql(f"DROP TABLE IF EXISTS {ledger}")
+    if fresh and not store_vectors:
         # a fresh rebuild without vectors must not leave a stale
         # sidecar for the refine path to serve from
-        spark.sql(f"DROP TABLE {store_name}__vec")
+        spark.sql(f"DROP TABLE IF EXISTS {vectors.tables[0]}")
     if batch_id is not None and not fresh:
         # ledger probe: the committed-batch set is model-sized (one
         # string per applied batch) — a driver-side membership check,
@@ -2192,36 +2185,19 @@ def ivfpq_postings_append(
         codebook=np.asarray(codebook, dtype=np.float64),
         extra_cols=("cell",),
     )
-    write_bucketed(
-        coded.select("cell", F.col(id_col), "codes"),
-        t,
-        "cell",
-        buckets=buckets,
-        sort_cols="cell",
-        path=None if path is None else f"{path}/{t}",
-        mode="append" if exists else "overwrite",
-    )
+    postings.append(coded.select("cell", F.col(id_col), "codes"))
     if store_vectors:
-        vt = f"{store_name}__vec"
-        vec_exists = spark.catalog.tableExists(vt) and not fresh
-        write_bucketed(
-            resid.select("cell", F.col(id_col), F.col("e")),
-            vt,
-            "cell",
-            buckets=buckets,
-            sort_cols="cell",
-            path=None if path is None else f"{path}/{vt}",
-            mode="append" if vec_exists else "overwrite",
-        )
+        vectors.append(resid.select("cell", F.col(id_col), F.col("e")))
     if batch_id is not None:
         # commit point: ledger row lands only after the sink write
         # succeeded (sink-first ⇒ at-least-once, never loss)
+        ledger_exists = spark.catalog.tableExists(ledger)
         lw = (
             spark.createDataFrame([(batch_id,)], "batch_id string")
             .write.format("parquet")
-            .mode("append" if spark.catalog.tableExists(ledger) else "overwrite")
+            .mode("append" if ledger_exists else "overwrite")
         )
-        if path is not None and not spark.catalog.tableExists(ledger):
+        if path is not None and not ledger_exists:
             lw = lw.option("path", f"{path}/{ledger}")
         lw.saveAsTable(ledger)
     return True

@@ -1809,8 +1809,8 @@ def _session_store_dir(prefix: str = "spark_graft_sub_store_") -> str:
 @query("dedup_substring_incremental", None)  # oracle registered below
 def dedup_substring_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Substring dedup against a PERSISTED bucketed positional-shingle
-    store (`dedup.incremental_substring_dedup_bucketed`) — the fourth
-    incremental store, closing the family: each batch is checked for
+    store (`dedup.incremental_substring_dedup_bucketed`), one of the
+    seven incremental stores: each batch is checked for
     ≥20-token verbatim runs against ALL seen docs without re-reading
     earlier batches; the store side of the hash join reads
     exchange-free (bucketed on the shingle hash). Two id-ordered
@@ -2319,7 +2319,7 @@ _register_audio_fp_oracle()
 def dedup_fingerprint_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image-dHash dedup through the PERSISTED banded-fingerprint
     store (`dedup.incremental_fingerprint_dedup_bucketed`) — the
-    FIFTH incremental store, giving the image/audio fingerprint
+    incremental store giving the image/audio fingerprint
     modalities the same batch-vs-history shape the text family has:
     each batch's fingerprints check within Hamming 3 of ALL accepted
     survivors without re-hashing earlier batches; the store side of
@@ -2418,8 +2418,8 @@ _register_fp_incremental_oracle()
 
 @query("dedup_video_incremental", None)  # oracle registered below
 def dedup_video_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """VIDEO dedup through the persisted banded store — the SIXTH
-    incremental-store member (`dedup.incremental_video_dedup_bucketed`):
+    """VIDEO dedup through the persisted banded store
+    (`dedup.incremental_video_dedup_bucketed`):
     each crawl batch's frame-sampled perceptual fingerprints check
     against ALL accepted history with the ≥2-distinct-matching-frames
     doc rule, store side exchange-free (bucketed on the composite
@@ -6881,8 +6881,6 @@ def split_contamination_store_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (only the batch shuffles). Same split rule and accounting as
     `split_contamination`, so the two queries share one oracle and
     must hash-match each other."""
-    import tempfile
-
     from .operators.split import (
         contamination_store_write,
         contamination_vs_store,
@@ -6891,7 +6889,7 @@ def split_contamination_store_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     store = "q_contamination_store"
     spark.sql(f"DROP TABLE IF EXISTS {store}__shingles")
-    path = tempfile.mkdtemp(prefix="spark_graft_contam_store_")
+    path = _session_store_dir("spark_graft_contam_store_")
     docs = load_table(spark, sf_dir, "documents")
     lab = hash_split(docs, "doc_id")
     # fixture-scale bucket count (see dedup_incremental_bucketed)
@@ -7358,15 +7356,14 @@ def dedup_incremental_bucketed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch is small. Semantics and oracle are identical to
     `dedup_incremental` (two-phase, drop against store survivors
     only); the hash gate pins the bucketed path against the same
-    DuckDB twin. Tables are recreated under /tmp per run."""
-    import tempfile
-
-    from .operators.dedup import incremental_near_dup_bucketed
+    DuckDB twin. Tables are recreated per run in one store directory
+    per process."""
+    from .operators.dedup import NEAR_DUP_STORE, incremental_near_dup_bucketed
 
     store = "q_dedup_incr_store"
-    for t in (f"{store}__bands", f"{store}__sigs"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-    path = tempfile.mkdtemp(prefix="spark_graft_incr_store_")
+    for suffix in NEAR_DUP_STORE:
+        spark.sql(f"DROP TABLE IF EXISTS {store}{suffix}")
+    path = _session_store_dir("spark_graft_incr_store_")
     docs = load_table(spark, sf_dir, "documents")
     old = docs.filter(F.col("doc_id") < 250)
     new = docs.filter(F.col("doc_id") >= 250)
@@ -9349,13 +9346,12 @@ def dedup_incremental_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch shuffles (once; the in-batch min-id window shares the key).
     Two id-ordered batches here ≡ one full-corpus min-id exact dedup,
     which is the DuckDB twin."""
-    import tempfile
-
-    from .operators.dedup import incremental_exact_dedup_bucketed
+    from .operators.dedup import EXACT_STORE, incremental_exact_dedup_bucketed
 
     store = "q_dedup_exact_store"
-    spark.sql(f"DROP TABLE IF EXISTS {store}__keys")
-    path = tempfile.mkdtemp(prefix="spark_graft_exact_store_")
+    for suffix in EXACT_STORE:
+        spark.sql(f"DROP TABLE IF EXISTS {store}{suffix}")
+    path = _session_store_dir("spark_graft_exact_store_")
     docs = load_table(spark, sf_dir, "documents")
     s1 = incremental_exact_dedup_bucketed(
         docs.filter(F.col("doc_id") < 250), store, buckets=8, path=path

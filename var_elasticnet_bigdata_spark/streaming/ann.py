@@ -49,44 +49,30 @@ def stream_postings_append(
     (cell, id, codes) distinct collapses. Either way the served
     top-k equals a single clean append.
 
-    ``compact_every``: every N epochs the postings table (and the
-    vector sidecar if present) compacts in place — appends add one
-    file set per epoch, and a crawl-scale ingest wants bounded file
-    counts.
+    ``compact_every``: every N epochs the postings table (and, with
+    ``store_vectors``, the vector sidecar) compacts in place — appends
+    add one file set per epoch, and a crawl-scale ingest wants bounded
+    file counts.
 
     Returns the StreamingQuery; caller awaits termination."""
-    from ..operators.similarity import ivfpq_postings_append
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        ivfpq_postings_append(
-            batch_df,
-            store_name,
-            centroids,
-            codebook,
-            m=m,
-            k=k,
-            id_col=id_col,
-            vec_col=vec_col,
-            buckets=buckets,
-            path=store_path,
-            batch_id=f"epoch-{batch_id}",
-            store_vectors=store_vectors,
-        )
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            from ..sources.compaction import compact_bucketed
-
-            spark = batch_df.sparkSession
-            compact_bucketed(spark, f"{store_name}__pq")
-            if store_vectors:
-                compact_bucketed(spark, f"{store_name}__vec")
-
-    writer = (
-        vectors.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    from ..operators.similarity import (
+        POSTINGS_STORE,
+        VECTOR_SIDECAR,
+        ivfpq_postings_append,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    from .dedup import _store_loop
+
+    return _store_loop(
+        vectors,
+        store_name,
+        POSTINGS_STORE + (VECTOR_SIDECAR if store_vectors else ()),
+        checkpoint_dir,
+        compact_every,
+        trigger_available_now,
+        lambda batch_df, batch_id, _: ivfpq_postings_append(
+            batch_df, store_name, centroids, codebook, m=m, k=k,
+            id_col=id_col, vec_col=vec_col, buckets=buckets,
+            path=store_path, batch_id=f"epoch-{batch_id}",
+            store_vectors=store_vectors,
+        ),
+    )

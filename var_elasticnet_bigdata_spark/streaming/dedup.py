@@ -84,6 +84,73 @@ def stream_scored(docs: DataFrame) -> DataFrame:
     )
 
 
+def _store_loop(
+    frames: DataFrame,
+    store_name: str,
+    suffixes: tuple[str, ...],
+    checkpoint_dir: str,
+    compact_every: int | None,
+    trigger_available_now: bool,
+    apply,
+    out_path: str | None = None,
+):
+    """The foreachBatch crawl loop every store stream runs: skip empty
+    micro-batches, call ``apply(batch_df, batch_id, sink)`` — the
+    store operator, with ``sink`` appending survivors to the parquet
+    corpus at ``out_path`` (None without one) — and every
+    ``compact_every`` batches compact the store's tables in write
+    order (`sources.bucketing.BucketedStore.compact`). Returns the
+    started StreamingQuery; the caller awaits termination.
+
+    A store dedup needs the candidate join against all accepted
+    history, which Structured Streaming's keyed state cannot express;
+    `foreachBatch` is the sanctioned escape hatch for this
+    write-a-batch-against-external-state shape (the store tables ARE
+    the state, bounded by the accepted corpus, not the stream).
+
+    Restart semantics: `foreachBatch` replays the last uncommitted
+    micro-batch after a crash, so every write in it is at-least-once.
+    The sink fires inside the operator BEFORE any store append (the
+    store contract in `sources.bucketing`). A crash after the corpus
+    write but before or inside the store appends replays the batch
+    against a store that does not yet (fully) hold it: the same
+    survivors re-emerge, so the corpus gains duplicate rows but never
+    loses a document. A crash after both writes replays against a
+    store that already holds the batch; it self-matches and drops.
+    Store first, that replay would drop documents that never reached
+    the corpus. Exactly-once needs an idempotent sink (MERGE on the
+    id) — out of scope for the parquet sink; downstream readers dedup
+    corpus rows by id if replay duplicates matter.
+
+    Compaction runs INSIDE foreachBatch: the stream is the store's
+    only writer, so the quiesced-readers requirement holds by
+    construction, and a crash inside it heals when the next batch
+    opens the store. Append-only bucketed stores gain one file per
+    task per bucket per batch, so a long-running ingest would
+    otherwise degrade every store join into a many-tiny-files scan."""
+    from ..sources.bucketing import BucketedStore
+
+    def sink(surv: DataFrame) -> None:
+        surv.write.mode("append").parquet(out_path)
+
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        apply(batch_df, batch_id, None if out_path is None else sink)
+        if compact_every and (batch_id + 1) % compact_every == 0:
+            spark = batch_df.sparkSession
+            BucketedStore(spark, store_name, suffixes).compact()
+
+    writer = (
+        frames.writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+    )
+    if trigger_available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def stream_near_dup_against_store(
     docs: DataFrame,
     store_name: str,
@@ -102,76 +169,24 @@ def stream_near_dup_against_store(
     incremental_near_dup_bucketed`: band join + shingle verify, both
     exchange-free on the store side) and against itself; survivors
     append to BOTH the parquet corpus at ``out_path`` and the store
-    tables, so the next micro-batch sees them.
+    tables, so the next micro-batch sees them. Exact dedup stays in
+    `stream_exact_dedup`'s watermarked state store; this operator is
+    its heavyweight sibling.
 
-    Near-dup dedup needs the candidate join against all accepted
-    history, which Structured Streaming's keyed state cannot express
-    — `foreachBatch` is the sanctioned escape hatch for exactly this
-    write-a-batch-against-external-state shape (the store tables ARE
-    the state, bounded by the accepted corpus, not the stream). Exact
-    dedup stays in `stream_exact_dedup`'s watermarked state store;
-    this operator is its heavyweight sibling.
-
-    Restart semantics: `foreachBatch` replays the last uncommitted
-    micro-batch after a crash, so every write in the batch function
-    is at-least-once. Write ORDER is what decides whether replay
-    duplicates or LOSES data: survivors are committed to the parquet
-    corpus at ``out_path`` FIRST (via the operator's ``on_survivors``
-    hook, which fires before any store append). A crash after the
-    corpus write but before/inside the store appends replays the
-    batch against a store that does not yet (fully) hold it — the
-    same survivors re-emerge and re-append, so the corpus gains
-    duplicate rows (true at-least-once) but never loses a document.
-    A crash after both writes but before the checkpoint commit
-    replays against a store that already holds the survivors; they
-    self-match (Jaccard 1.0) and drop, so neither corpus nor store
-    duplicates further. Were the order reversed (store first), that
-    same replay would drop documents that never reached the corpus —
-    permanent loss. Exactly-once needs an idempotent sink (MERGE on
-    doc_id) — out of scope for the parquet fixture sink; downstream
-    readers dedup corpus rows by doc_id if replay duplicates matter.
-
-    ``compact_every``: every N batches BOTH store tables (sigs, then
-    bands — same order as the appends, so the bands-present ⟹
-    sigs-present recovery invariant survives a crash between the two
-    compactions) are rewritten in place
-    (`sources/compaction.compact_bucketed`) — same motivation as the
-    exact loop: append-only bucketed stores gain one file per task
-    per bucket per batch. A crash inside either compaction heals via
-    `recover_orphaned_compaction` at the next batch's exists-probe.
-
-    Returns the StreamingQuery; caller awaits termination.
+    Runs on `_store_loop` (restart semantics, ``compact_every``); a
+    replayed batch self-matches the store at Jaccard 1.0 and drops.
     """
-    from ..operators.dedup import incremental_near_dup_bucketed
+    from ..operators.dedup import NEAR_DUP_STORE, incremental_near_dup_bucketed
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        incremental_near_dup_bucketed(
-            batch_df,
-            store_name,
-            threshold=threshold,
-            buckets=buckets,
-            path=store_path,
-            on_survivors=lambda surv: surv.write.mode("append").parquet(
-                out_path
-            ),
-        )
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            from ..sources.compaction import compact_bucketed
-
-            spark = batch_df.sparkSession
-            compact_bucketed(spark, f"{store_name}__sigs")
-            compact_bucketed(spark, f"{store_name}__bands")
-
-    writer = (
-        docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return _store_loop(
+        docs, store_name, NEAR_DUP_STORE, checkpoint_dir, compact_every,
+        trigger_available_now,
+        lambda batch_df, _, sink: incremental_near_dup_bucketed(
+            batch_df, store_name, threshold=threshold, buckets=buckets,
+            path=store_path, on_survivors=sink,
+        ),
+        out_path,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_exact_dedup_against_store(
@@ -190,50 +205,21 @@ def stream_exact_dedup_against_store(
     most common production crawl loop (URL / normalized-content
     keys): each micro-batch anti-joins the accepted corpus's key
     table (exchange-free on the store side), survivors append to the
-    parquet corpus FIRST (the operator's ``on_survivors`` hook — same
-    sink-before-store crash contract: replay duplicates corpus rows,
-    never loses documents) and their keys append to the store so the
-    next batch sees them.
+    parquet corpus and then their keys to the store, so the next
+    batch sees them. Runs on `_store_loop` (restart semantics,
+    ``compact_every``; compaction keeps the bucket spec, so the
+    exchange-free join shape survives)."""
+    from ..operators.dedup import EXACT_STORE, incremental_exact_dedup_bucketed
 
-    ``compact_every``: every N batches the key table is compacted
-    in place (`sources/compaction.compact_bucketed`) — append-only
-    bucketed stores gain one file per task per bucket per batch, so
-    a long-running ingest would otherwise degrade every subsequent
-    anti-join into a many-tiny-files scan. Compaction runs INSIDE
-    foreachBatch (the stream is the table's only writer, so the
-    quiesced-readers requirement holds by construction) and keeps
-    the bucket spec, so the exchange-free join shape survives.
-
-    Returns the StreamingQuery; caller awaits termination.
-    """
-    from ..operators.dedup import incremental_exact_dedup_bucketed
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        incremental_exact_dedup_bucketed(
-            batch_df,
-            store_name,
-            buckets=buckets,
-            path=store_path,
-            on_survivors=lambda surv: surv.write.mode("append").parquet(
-                out_path
-            ),
-        )
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            from ..sources.compaction import compact_bucketed
-
-            compact_bucketed(spark, f"{store_name}__keys")
-
-    writer = (
-        docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return _store_loop(
+        docs, store_name, EXACT_STORE, checkpoint_dir, compact_every,
+        trigger_available_now,
+        lambda batch_df, _, sink: incremental_exact_dedup_bucketed(
+            batch_df, store_name, buckets=buckets, path=store_path,
+            on_survivors=sink,
+        ),
+        out_path,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_semantic_dedup_against_store(
@@ -249,52 +235,25 @@ def stream_semantic_dedup_against_store(
     trigger_available_now: bool = True,
 ):
     """Continuous SemDeDup against the persisted per-cell vector
-    store (`similarity.incremental_semantic_dedup_bucketed`) — the
-    semantic member of the streaming crawl-loop trio (exact keys,
-    MinHash bands, semantic cells). ``centroids`` is the FIXED
-    trained matrix (train once up front — `kmeans_train`); survivors
-    commit to the parquet corpus FIRST via the operator's
-    ``on_survivors`` hook (sink-before-store: replay duplicates the
-    corpus, never loses a vector; note the store is a SEEN-SET, so a
-    replayed batch self-matches at cosine 1.0 and drops).
-
-    ``compact_every``: every N batches the vector store is compacted
-    in place (`sources/compaction.compact_bucketed`; crash inside it
-    heals via `recover_orphaned_compaction` at the next batch's
-    exists-probe) — same small-files motivation as the exact/near-dup
-    loops.
-
-    Returns the StreamingQuery; caller awaits termination.
-    """
-    from ..operators.similarity import incremental_semantic_dedup_bucketed
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        incremental_semantic_dedup_bucketed(
-            batch_df,
-            store_name,
-            centroids,
-            eps=eps,
-            buckets=buckets,
-            path=store_path,
-            on_survivors=lambda surv: surv.write.mode("append").parquet(
-                out_path
-            ),
-        )
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            from ..sources.compaction import compact_bucketed
-
-            compact_bucketed(batch_df.sparkSession, f"{store_name}__vecs")
-
-    writer = (
-        docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    store (`similarity.incremental_semantic_dedup_bucketed`).
+    ``centroids`` is the FIXED trained matrix (train once up front —
+    `kmeans_train`). Runs on `_store_loop` (restart semantics,
+    ``compact_every``); the store is a SEEN-SET, so a replayed batch
+    self-matches at cosine 1.0 and drops."""
+    from ..operators.similarity import (
+        SEMANTIC_STORE,
+        incremental_semantic_dedup_bucketed,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+
+    return _store_loop(
+        docs, store_name, SEMANTIC_STORE, checkpoint_dir, compact_every,
+        trigger_available_now,
+        lambda batch_df, _, sink: incremental_semantic_dedup_bucketed(
+            batch_df, store_name, centroids, eps=eps, buckets=buckets,
+            path=store_path, on_survivors=sink,
+        ),
+        out_path,
+    )
 
 
 def stream_substring_dedup_against_store(
@@ -312,54 +271,30 @@ def stream_substring_dedup_against_store(
 ):
     """Continuous SUBSTRING dedup against the persisted positional-
     shingle store (`operators/dedup.incremental_substring_dedup_
-    bucketed`) — the fourth streaming crawl loop (exact keys, MinHash
-    bands, semantic cells, positional shingles): each micro-batch is
-    checked for ≥``min_run_tokens``-token verbatim runs against ALL
-    accepted history (store side of the hash join exchange-free),
-    survivors commit to the parquet corpus FIRST via the operator's
-    ``on_survivors`` hook (sink-before-store: replay duplicates the
-    corpus, never loses a document; the store is a SEEN-SET and the
-    operator deduplicates replayed match rows before island counting,
-    so a replayed batch re-drops exactly its original drops).
-
-    ``compact_every``: every N batches the shingle store is compacted
-    in place (`sources/compaction.compact_bucketed`; crash inside it
-    heals via `recover_orphaned_compaction` at the next batch's
-    exists-probe) — the positional store grows fastest of the four
-    (one row per token position), so compaction matters most here.
-
-    Returns the StreamingQuery; caller awaits termination.
-    """
-    from ..operators.dedup import incremental_substring_dedup_bucketed
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        incremental_substring_dedup_bucketed(
-            batch_df,
-            store_name,
-            width=width,
-            min_run_tokens=min_run_tokens,
-            max_docs_per_shingle=max_docs_per_shingle,
-            buckets=buckets,
-            path=store_path,
-            on_survivors=lambda surv: surv.write.mode("append").parquet(
-                out_path
-            ),
-        )
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            from ..sources.compaction import compact_bucketed
-
-            compact_bucketed(batch_df.sparkSession, f"{store_name}__psh")
-
-    writer = (
-        docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    bucketed`): each micro-batch is checked for
+    ≥``min_run_tokens``-token verbatim runs against ALL accepted
+    history (store side of the hash join exchange-free). Runs on
+    `_store_loop` (restart semantics, ``compact_every``); the store is
+    a SEEN-SET and the operator deduplicates replayed match rows
+    before island counting, so a replayed batch re-drops exactly its
+    original drops. The positional store grows fastest of the seven
+    (one row per token position), so compaction matters most here."""
+    from ..operators.dedup import (
+        SUBSTRING_STORE,
+        incremental_substring_dedup_bucketed,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+
+    return _store_loop(
+        docs, store_name, SUBSTRING_STORE, checkpoint_dir, compact_every,
+        trigger_available_now,
+        lambda batch_df, _, sink: incremental_substring_dedup_bucketed(
+            batch_df, store_name, width=width,
+            min_run_tokens=min_run_tokens,
+            max_docs_per_shingle=max_docs_per_shingle, buckets=buckets,
+            path=store_path, on_survivors=sink,
+        ),
+        out_path,
+    )
 
 
 def stream_fingerprint_dedup_against_store(
@@ -379,58 +314,30 @@ def stream_fingerprint_dedup_against_store(
 ):
     """Continuous perceptual-FINGERPRINT dedup against the persisted
     banded-fingerprint store (`operators/dedup.incremental_
-    fingerprint_dedup_bucketed`) — the FIFTH streaming crawl loop
-    (exact keys, MinHash bands, semantic cells, positional shingles,
-    banded fingerprints), the one a multimodal ingest runs after its
-    decode stage: ``docs`` carries a precomputed int64 fingerprint
-    column (`multimodal.image_dhash` / `audio_fingerprint` /
-    `dedup.simhash` — all narrow stages that compose onto the stream
-    unchanged); each micro-batch's fingerprints check within
-    ``max_hamming`` of ALL accepted survivors (store side of the band
-    join exchange-free), survivors commit to the parquet corpus FIRST
-    via ``on_survivors`` (sink-before-store: replay duplicates the
-    corpus, never loses a document; a replayed batch re-matches the
-    stored survivors and re-drops).
-
-    ``compact_every``: every N batches the fingerprint store is
-    compacted in place (the store grows ``bands`` rows per accepted
-    item — the slowest-growing of the five, but a crawl-scale ingest
-    still wants bounded file counts).
-
-    Returns the StreamingQuery; caller awaits termination.
-    """
-    from ..operators.dedup import incremental_fingerprint_dedup_bucketed
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        incremental_fingerprint_dedup_bucketed(
-            batch_df,
-            store_name,
-            hash_col=hash_col,
-            bits=bits,
-            bands=bands,
-            max_hamming=max_hamming,
-            max_ids_per_bucket=max_ids_per_bucket,
-            buckets=buckets,
-            path=store_path,
-            on_survivors=lambda surv: surv.write.mode("append").parquet(
-                out_path
-            ),
-        )
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            from ..sources.compaction import compact_bucketed
-
-            compact_bucketed(batch_df.sparkSession, f"{store_name}__fpb")
-
-    writer = (
-        docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    fingerprint_dedup_bucketed`) — the store stream a multimodal
+    ingest runs after its decode stage: ``docs`` carries a
+    precomputed int64 fingerprint column (`multimodal.image_dhash` /
+    `audio_fingerprint` / `dedup.simhash` — all narrow stages that
+    compose onto the stream unchanged); each micro-batch's
+    fingerprints check within ``max_hamming`` of ALL accepted
+    survivors (store side of the band join exchange-free). Runs on
+    `_store_loop` (restart semantics, ``compact_every``); a replayed
+    batch re-matches the stored survivors and re-drops."""
+    from ..operators.dedup import (
+        FINGERPRINT_STORE,
+        incremental_fingerprint_dedup_bucketed,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+
+    return _store_loop(
+        docs, store_name, FINGERPRINT_STORE, checkpoint_dir, compact_every,
+        trigger_available_now,
+        lambda batch_df, _, sink: incremental_fingerprint_dedup_bucketed(
+            batch_df, store_name, hash_col=hash_col, bits=bits, bands=bands,
+            max_hamming=max_hamming, max_ids_per_bucket=max_ids_per_bucket,
+            buckets=buckets, path=store_path, on_survivors=sink,
+        ),
+        out_path,
+    )
 
 
 def stream_video_dedup_against_store(
@@ -451,52 +358,25 @@ def stream_video_dedup_against_store(
     trigger_available_now: bool = True,
 ):
     """Continuous VIDEO dedup against the persisted banded store
-    (`operators/dedup.incremental_video_dedup_bucketed`) — the SIXTH
-    streaming crawl loop: ``frames`` carries per-video frame-sampled
-    fingerprints (`multimodal.video_frame_dhash` composes onto the
-    stream unchanged — payload bytes in, (id, frame_idx, dhash) rows
-    out); each micro-batch's videos check against ALL accepted
-    history under the ≥``min_matching_frames`` rule, surviving frame
-    rows commit to parquet FIRST (sink-before-store: replay
-    duplicates the sink, never loses a video; a replayed batch
-    re-matches its own stored frames per-frame and re-drops).
+    (`operators/dedup.incremental_video_dedup_bucketed`):
+    ``frames`` carries per-video frame-sampled fingerprints
+    (`multimodal.video_frame_dhash` composes onto the stream
+    unchanged — payload bytes in, (id, frame_idx, dhash) rows out);
+    each micro-batch's videos check against ALL accepted history
+    under the ≥``min_matching_frames`` rule, and surviving frame rows
+    go to the sink. Runs on `_store_loop` (restart semantics,
+    ``compact_every``); a replayed batch re-matches its own stored
+    frames per-frame and re-drops."""
+    from ..operators.dedup import VIDEO_STORE, incremental_video_dedup_bucketed
 
-    ``compact_every``: in-loop compaction of ``{store}__vfpb`` —
-    the store grows ``bands × frames_sampled`` rows per accepted
-    video, so crawl-scale ingests want bounded file counts.
-
-    Returns the StreamingQuery; caller awaits termination."""
-    from ..operators.dedup import incremental_video_dedup_bucketed
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        incremental_video_dedup_bucketed(
-            batch_df,
-            store_name,
-            frame_col=frame_col,
-            hash_col=hash_col,
-            min_matching_frames=min_matching_frames,
-            bits=bits,
-            bands=bands,
-            max_hamming=max_hamming,
-            max_ids_per_bucket=max_ids_per_bucket,
-            buckets=buckets,
-            path=store_path,
-            on_survivors=lambda surv: surv.write.mode("append").parquet(
-                out_path
-            ),
-        )
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            from ..sources.compaction import compact_bucketed
-
-            compact_bucketed(batch_df.sparkSession, f"{store_name}__vfpb")
-
-    writer = (
-        frames.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return _store_loop(
+        frames, store_name, VIDEO_STORE, checkpoint_dir, compact_every,
+        trigger_available_now,
+        lambda batch_df, _, sink: incremental_video_dedup_bucketed(
+            batch_df, store_name, frame_col=frame_col, hash_col=hash_col,
+            min_matching_frames=min_matching_frames, bits=bits, bands=bands,
+            max_hamming=max_hamming, max_ids_per_bucket=max_ids_per_bucket,
+            buckets=buckets, path=store_path, on_survivors=sink,
+        ),
+        out_path,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
